@@ -48,16 +48,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from german_newspaper_crawler_spark.plans.queries import ordered_registry
+    from german_newspaper_crawler_spark.plans.queries import REGISTRY
 
-    return {name: spec.spark for name, spec in ordered_registry().items()}
+    return {name: spec.spark for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from german_newspaper_crawler_spark.plans.queries import ordered_registry
+    from german_newspaper_crawler_spark.plans.queries import REGISTRY
 
     return {
         name: spec.oracle
-        for name, spec in ordered_registry().items()
+        for name, spec in REGISTRY.items()
         if spec.oracle is not None
     }

@@ -73,6 +73,12 @@ def carry_cache_release(result: DataFrame, *sources: DataFrame) -> DataFrame:
     return result
 
 
+_WIDE_NODES = frozenset({
+    "Aggregate", "Join", "Window", "Repartition", "RepartitionByExpression",
+    "Sort", "InMemoryRelation", "Generate", "Union",
+})
+
+
 def widen_if_narrow(df: DataFrame) -> DataFrame:
     """Repartition up to the session's shuffle parallelism when the input
     plan has fewer partitions. A single-file / few-row-group parquet scan
@@ -84,36 +90,24 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
     scan is already at least as wide as ``spark.sql.shuffle.partitions`` —
     i.e. always at cluster scale — so the extra exchange exists exactly when
     it buys parallelism."""
-    spark = df.sparkSession
-    try:
-        # only probe scan-shaped lineages (project/filter over a relation):
-        # anything that already passed a shuffle (aggregate/join/window/
-        # repartition) or a cache is as wide as the session's shuffle
-        # parallelism, and calling .rdd on such an adaptive plan would
-        # eagerly materialize its query stages at plan-build time
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(
-            k in plan
-            for k in (
-                "Aggregate", "Join", "Window", "Repartition", "Sort",
-                "InMemoryRelation", "Generate", "Union",
-            )
-        ):
+    # only probe scan-shaped lineages (project/filter over a relation):
+    # anything that already passed a shuffle (aggregate/join/window/
+    # repartition) or a cache is as wide as the session's shuffle
+    # parallelism, and calling .rdd on such an adaptive plan would eagerly
+    # materialize its query stages at plan-build time. Matched on the
+    # analyzed plan's node names (subquery plans included), never on its
+    # string form, which also carries column names.
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _WIDE_NODES:
             return df
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if df.rdd.getNumPartitions() < p:
-            return df.repartition(p)
-    except Exception:
-        pass
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if df.rdd.getNumPartitions() < p:
+        return df.repartition(p)
     return df
-
-
-def exact_dedup(df: DataFrame, id_col: str, sig_col) -> DataFrame:
-    """Exact dedup: keep min-id row per signature (reference identity as a
-    groupBy; the crawl path uses the anti-join form instead)."""
-    return df.groupBy(sig_col.alias("sig")).agg(
-        F.min(id_col).alias("keeper"), F.count("*").alias("n_dups")
-    )
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:

@@ -1,28 +1,20 @@
 """Multimodal binary-column operators (training-data pipeline mandate).
 
-Image/audio/video payloads are opaque ``binary`` columns with typed
+Audio/video payloads are opaque ``binary`` columns with typed
 metadata; the transforms run as Arrow-batched ``mapInPandas``. The container
 has no media libraries, so:
 
-* **image** decode/resize are REAL (in-repo numpy+zlib PNG codec + area
-  resize — the same code the crawl uses),
 * **audio** decode is REAL for RIFF/WAVE PCM (pure-numpy chunk parser:
   8/16/24/32-bit integer PCM + 32-bit IEEE float, mono-mixdown for
-  multichannel, WAVE_FORMAT_EXTENSIBLE unwrapped) and for G.711
-  µ-law/A-law telephony WAV (format codes 7/6; CCITT expand/compress
-  pair, vectorized); other compressed codecs (ADPCM/MP3/...) raise
-  ``NotImplementedError`` listing the library a deployment would plug
-  in (librosa/soundfile),
+  multichannel, WAVE_FORMAT_EXTENSIBLE unwrapped); compressed codecs
+  (G.711/ADPCM/MP3/...) raise ``NotImplementedError`` listing the library
+  a deployment would plug in (librosa/soundfile),
 * **video** decode is REAL for YUV4MPEG2 (pure-numpy Y4M parser: C444 +
   C420 chroma with BT.601 limited-range conversion); compressed
   containers (mp4/h264/...) raise ``NotImplementedError`` listing the
   library a deployment would plug in (ffmpeg/PyAV). Every call site
   crosses one narrow ``decode_*`` function, so swapping in the real
   codec touches nothing else.
-
-Fake fixture formats (deterministic, for plumbing tests):
-  audio: b"FAKA" + int32 sample_rate + int16 PCM samples
-  video: b"FAKV" + int32 n_frames,w,h + n_frames raw RGB frames
 """
 
 from __future__ import annotations
@@ -33,26 +25,16 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 
-FAKE_AUDIO_MAGIC = b"FAKA"
-FAKE_VIDEO_MAGIC = b"FAKV"
-
-
-# --- deterministic fake codecs (STUB boundary) --------------------------------
-
-def encode_fake_audio(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    return FAKE_AUDIO_MAGIC + struct.pack(">I", sample_rate) + samples.astype("<i2").tobytes()
-
 
 def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     """Minimal RIFF/WAVE PCM16 writer. ``samples``: int16 array, shape (n,)
-    for mono or (n, channels) interleaved on write. The real counterpart of
-    :func:`encode_fake_audio`, used by fixtures and tests."""
+    for mono or (n, channels) interleaved on write. Used by fixtures and
+    tests."""
     pcm = np.asarray(samples).astype("<i2")
     n_ch = 1 if pcm.ndim == 1 else pcm.shape[1]
     data = pcm.tobytes()
@@ -65,71 +47,6 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
         + b"data" + struct.pack("<I", len(data)) + data
     )
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def g711_compress(samples: np.ndarray, law: str) -> np.ndarray:
-    """ITU-T G.711 µ-law / A-law compression (the CCITT reference
-    ``linear2ulaw``/``linear2alaw``, vectorized). ``samples``: int16 linear
-    → uint8 codewords. Fixture/writer counterpart of :func:`_g711_expand`."""
-    x = np.asarray(samples).astype(np.int32)
-    if law == "ulaw":
-        sign = np.where(x < 0, 0x80, 0)
-        mag = np.minimum(np.abs(x), 32635) + 0x84
-        seg = np.searchsorted(
-            np.array([0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF, 0x3FFF]), mag
-        )
-        uval = sign | (seg << 4) | ((mag >> (seg + 3)) & 0x0F)
-        out = (~uval) & 0xFF
-    elif law == "alaw":
-        pcm = x >> 3  # 13-bit magnitude domain
-        mask = np.where(pcm >= 0, 0xD5, 0x55)
-        pcm = np.where(pcm >= 0, pcm, -pcm - 1)
-        seg = np.searchsorted(
-            np.array([0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF]), pcm
-        )
-        shift = np.where(seg < 2, 1, seg)
-        out = ((seg << 4) | ((pcm >> shift) & 0x0F)) ^ mask
-    else:
-        raise ValueError(f"unknown companding law {law!r}")
-    return out.astype(np.uint8)
-
-
-def encode_wav_g711(codewords: np.ndarray, sample_rate: int, law: str) -> bytes:
-    """RIFF/WAVE writer for raw G.711 codewords (format code 6 = A-law,
-    7 = µ-law, 8 bits/sample, mono)."""
-    cw = np.asarray(codewords).astype("u1")
-    code = {"alaw": 6, "ulaw": 7}[law]
-    fmt = struct.pack("<HHIIHH", code, 1, sample_rate, sample_rate, 1, 8)
-    data = cw.tobytes()
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _g711_expand(b: np.ndarray, law: str) -> np.ndarray:
-    """ITU-T G.711 µ-law / A-law expansion (the CCITT reference
-    ``ulaw2linear``/``alaw2linear``, vectorized). ``b``: uint8 codewords →
-    float32 in [-1, 1) on the int16 scale (µ-law peaks at ±32124/32768,
-    A-law at ±32256/32768 — the codec's true dynamic range)."""
-    b = b.astype(np.int32)
-    if law == "ulaw":
-        u = (~b) & 0xFF
-        t = (((u & 0x0F) << 3) + 0x84) << ((u & 0x70) >> 4)
-        lin = np.where(u & 0x80, 0x84 - t, t - 0x84)
-    elif law == "alaw":
-        a = b ^ 0x55
-        seg = (a & 0x70) >> 4
-        base = (a & 0x0F) << 4
-        t = np.where(seg == 0, base + 8, (base + 0x108) << np.maximum(seg - 1, 0))
-        # G.711 A-law: sign bit SET (after the 0x55 toggle) means POSITIVE
-        lin = np.where(a & 0x80, t, -t)
-    else:  # pragma: no cover - internal
-        raise ValueError(f"unknown companding law {law!r}")
-    return lin.astype(np.float32) / 32768.0
 
 
 def _decode_wav(data: bytes) -> tuple[np.ndarray, int]:
@@ -176,10 +93,6 @@ def _decode_wav(data: bytes) -> tuple[np.ndarray, int]:
             raise NotImplementedError(f"{bits}-bit integer PCM unsupported")
     elif audio_format == 3 and bits == 32:  # IEEE float
         x = np.frombuffer(raw[: len(raw) // 4 * 4], "<f4").astype(np.float32)
-    elif audio_format == 6 and bits == 8:  # G.711 A-law
-        x = _g711_expand(np.frombuffer(raw, "u1"), "alaw")
-    elif audio_format == 7 and bits == 8:  # G.711 µ-law
-        x = _g711_expand(np.frombuffer(raw, "u1"), "ulaw")
     else:
         raise NotImplementedError(
             f"WAV format code {audio_format} requires librosa/soundfile "
@@ -193,21 +106,11 @@ def _decode_wav(data: bytes) -> tuple[np.ndarray, int]:
 
 def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     """→ (float32 mono samples in [-1,1], sample_rate). REAL for RIFF/WAVE
-    PCM + G.711 µ-law/A-law (:func:`_decode_wav`) and the in-repo fixture
-    format; other compressed codecs raise ``NotImplementedError``
-    (librosa/soundfile in deployment)."""
+    PCM (:func:`_decode_wav`); compressed codecs raise
+    ``NotImplementedError`` (librosa/soundfile in deployment)."""
     if data[:4] == b"RIFF":
         return _decode_wav(data)
-    if data[:4] == FAKE_AUDIO_MAGIC:
-        (sr,) = struct.unpack(">I", data[4:8])
-        pcm = np.frombuffer(data[8:], "<i2").astype(np.float32) / 32768.0
-        return pcm, sr
     raise NotImplementedError("audio codec requires librosa/soundfile (not in container)")
-
-
-def encode_fake_video(frames: np.ndarray) -> bytes:
-    n, h, w, _ = frames.shape
-    return FAKE_VIDEO_MAGIC + struct.pack(">III", n, w, h) + frames.astype(np.uint8).tobytes()
 
 
 # BT.601 limited-range RGB↔YCbCr (the Y4M convention): Y ∈ [16, 235],
@@ -222,7 +125,7 @@ def encode_y4m(
     ffmpeg/mjpegtools emit): ``C444`` keeps full chroma (round-trip lossy
     only through the ±1 color-matrix rounding); ``C420`` 2×2-averages the
     chroma planes (C420jpeg siting) — genuinely lossy, the fixture for the
-    PSNR invariant. The real counterpart of :func:`encode_fake_video`."""
+    PSNR invariant."""
     n, h, w, _ = frames.shape
     if chroma == "420" and (w % 2 or h % 2):
         raise ValueError("C420 requires even frame dimensions")
@@ -310,97 +213,16 @@ def _decode_y4m(data: bytes) -> np.ndarray:
 
 def decode_video(data: bytes) -> np.ndarray:
     """→ (n_frames, h, w, 3) uint8. REAL for YUV4MPEG2 (:func:`_decode_y4m`
-    — C444 + C420, pure numpy) and the in-repo fixture format; compressed
+    — C444 + C420, pure numpy); compressed
     containers (mp4/h264/...) raise ``NotImplementedError`` — that call
     site is where a deployment plugs ffmpeg/PyAV."""
     if data[:9] == b"YUV4MPEG2":
         return _decode_y4m(data)
-    if data[:4] == FAKE_VIDEO_MAGIC:
-        n, w, h = struct.unpack(">III", data[4:16])
-        return np.frombuffer(data[16:], np.uint8).reshape(n, h, w, 3)
     raise NotImplementedError("video codec requires ffmpeg/PyAV (not in container)")
 
 
-# --- metadata sniff ------------------------------------------------------------
 
-_MAGIC = [
-    (b"\x89PNG", "image/png"), (b"FJPG", "image/fake-jpeg"),
-    (b"\xff\xd8\xff", "image/jpeg"), (b"GIF8", "image/gif"),
-    (b"FAKA", "audio/fake-pcm"), (b"RIFF", "audio/wav"),
-    (b"FAKV", "video/fake-raw"), (b"YUV4MPEG2", "video/y4m"),
-    (b"\x00\x00\x00", "video/mp4-ish"),
-    (b"%PDF", "application/pdf"),
-]
-
-BINARY_META = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def sniff_binary_metadata(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
-    """Typed metadata for opaque binary columns — vectorized magic sniff."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mimes, sizes = [], []
-            for b in pdf[bytes_col]:
-                data = bytes(b) if b is not None else b""
-                mime = "application/octet-stream"
-                for magic, m in _MAGIC:
-                    if data[: len(magic)] == magic:
-                        mime = m
-                        break
-                mimes.append(mime)
-                sizes.append(len(data))
-            yield pd.DataFrame(
-                {"media_id": pdf[id_col], "mime": mimes, "n_bytes": sizes}
-            )
-
-    return df.select(F.col(id_col), F.col(bytes_col)).mapInPandas(run, BINARY_META)
-
-
-# --- image resize (REAL — in-repo codec) ----------------------------------------
-
-RESIZED = StructType(
-    [
-        StructField("image_id", StringType()),
-        StructField("bytes", BinaryType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-    ]
-)
-
-
-def resize_images(df: DataFrame, size: int, id_col: str = "image_id", bytes_col: str = "bytes") -> DataFrame:
-    """Decode → area-resize to size×size → re-encode PNG (undecodable rows
-    dropped; at scale they route to a quarantine table)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from german_newspaper_crawler_spark.functions.codec import decode_image, encode_png
-        from german_newspaper_crawler_spark.functions.phash import _resize_area
-
-        for pdf in batches:
-            rows = []
-            for mid, b in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    rgb = decode_image(bytes(b))
-                except (NotImplementedError, ValueError):
-                    continue
-                small = np.stack(
-                    [_resize_area(rgb[:, :, c].astype(np.float64), size) for c in range(3)],
-                    axis=-1,
-                ).clip(0, 255).astype(np.uint8)
-                rows.append((mid, encode_png(small), size, size))
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED.fields])
-
-    return df.mapInPandas(run, RESIZED)
-
-
-# --- audio features (plumbing real, codec stubbed) --------------------------------
+# --- audio features (in-repo WAV decoder) ---------------------------------------
 
 AUDIO_FEATURES = StructType(
     [
@@ -436,7 +258,7 @@ def audio_features(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
     return df.mapInPandas(run, AUDIO_FEATURES)
 
 
-# --- video frame sampling (plumbing real, codec stubbed) ----------------------------
+# --- video frame sampling (in-repo Y4M decoder) ---------------------------------
 
 FRAMES = StructType(
     [
@@ -470,68 +292,3 @@ def sample_video_frames(df: DataFrame, every_n: int, id_col: str, bytes_col: str
 
     return df.mapInPandas(run, FRAMES)
 
-
-# --- image quality stats (REAL — in-repo codec) ---------------------------------
-
-IMAGE_STATS = StructType(
-    [
-        StructField("image_id", StringType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("mean_lum", DoubleType()),
-        StructField("std_lum", DoubleType()),
-        StructField("entropy", DoubleType()),
-        StructField("edge_density", DoubleType()),
-    ]
-)
-
-
-def image_stats(
-    df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
-) -> DataFrame:
-    """Image quality features for corpus filtering (the LAION/DataComp-style
-    pre-filter: drop blanks, near-solid fills, extreme-luminance and
-    low-detail images before captioning/training):
-
-    * mean/std luminance (BT.601), rounded 6dp,
-    * 64-bin luminance histogram entropy in bits,
-    * edge density: fraction of pixels whose horizontal/vertical gradient
-      magnitude exceeds 10/255 — a cheap sharpness/detail proxy.
-
-    One vectorized numpy pass per image inside ``mapInPandas`` (decode via
-    the in-repo codec; undecodable rows are dropped — quarantine at scale).
-    Downstream filtering is plain relational predicates over these columns.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from german_newspaper_crawler_spark.functions.codec import decode_image
-
-        for pdf in batches:
-            rows = []
-            for iid, b in zip(pdf[id_col], pdf[bytes_col]):
-                if b is None:
-                    continue
-                try:
-                    rgb = decode_image(bytes(b))
-                except (NotImplementedError, ValueError):
-                    continue
-                lum = (
-                    0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-                ).astype(np.float64)
-                h, w = lum.shape
-                hist, _ = np.histogram(lum, bins=64, range=(0.0, 255.0))
-                p = hist / max(hist.sum(), 1)
-                nz = p[p > 0]
-                entropy = float(-(nz * np.log2(nz)).sum())
-                gx = np.abs(np.diff(lum, axis=1))
-                gy = np.abs(np.diff(lum, axis=0))
-                edges = (gx > 10).sum() + (gy > 10).sum()
-                denom = max(gx.size + gy.size, 1)
-                rows.append((
-                    iid, int(w), int(h),
-                    round(float(lum.mean()), 6), round(float(lum.std()), 6),
-                    round(entropy, 6), round(edges / denom, 6),
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_STATS.fields])
-
-    return df.select(F.col(id_col), F.col(bytes_col)).mapInPandas(run, IMAGE_STATS)

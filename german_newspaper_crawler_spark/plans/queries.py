@@ -742,17 +742,6 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-def _shingle_cols():
-    """3-word shingles as a JVM-side transform (no UDF)."""
-    toks = F.split(F.trim("text"), r"\s+")
-    return F.array_distinct(
-        F.expr(
-            "transform(sequence(1, size(tk) - 2), "
-            "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1), ' ', element_at(tk, i + 2)))"
-        )
-    ), toks
-
-
 _SHINGLE_SQL = """
     toks AS (
       SELECT doc_id, regexp_split_to_array(TRIM(text), '\\s+') AS tk FROM documents
@@ -3083,95 +3072,3 @@ def o4x_authority_pop(spark, sf_dir):
         authority=auth, round_budget=40,
     )
     return popped.select("url", "host", "priority", "seq")
-
-
-# ---------------------------------------------------------------------------
-# Registry ordering. The driver grades a bounded prefix of ``queries()``
-# (observed: first 50 entries), so registration order decides which entries
-# get a CORRECTNESS row. The rotation alternates round to round (VERDICT-r4
-# #1 / ADVICE-r4): entries rotated out of one round's window come back to
-# the FRONT of the next, and the slots are filled by entries that just got
-# a green driver row — so no entry goes more than one round without
-# independent driver-side verification. Out-of-window entries remain
-# value-checked against DuckDB on every pytest run
-# (tests/test_oracle_queries.py over the FULL registry) and partition-
-# determinism-gated. Rotation history documented in COVERAGE.md.
-# ---------------------------------------------------------------------------
-
-_ROTATED_TO_TAIL = [
-    # graded green in r5 (CORRECTNESS_r05) and UNCHANGED in r6 — rotated out
-    # so the 21 r5-tail entries regain a driver row (VERDICT-r5 #1). Every
-    # query whose implementation changed in the r6 optimization round
-    # (dedup/jaccard/curation/components/ranking/window-projection edits)
-    # stays in-window regardless.
-    "f1_sha256_identity",
-    "p1_href_validity_filter",
-    "p2_binary_url_filter",
-    "f2_f3_strip_tags_normalize",
-    "f5_urljoin_absolutize",
-    "f8_lenient_timestamp_parse",
-    "a5_a6_token_gate",
-    "f9_iso_date_format",
-    "f11_f12_coerce",
-    "w3_token_numbering",
-    "j2_config_lookup_join",
-    "a3_max_id_highwater",
-    "f5x_canonicalize_url",
-    "u2_refresh_collection_hashes",
-    "o1_o2_sort_truncate_tokens",
-    "a1_u1_distinct_union_hashes",
-    "a4_counts_by_collection",
-    # four more r5-green untouched slots freed so the window closes at 50
-    "o4x_authority_pop",
-    "sketch_quantile_doclen",
-    "graph_pagerank_hosts",
-    "sketch_countmin_user_counts",
-]
-
-_PROMOTED_TO_FRONT = [
-    # the 21 entries rotated to the tail in r5 (last driver row: r4) — back
-    # in the graded window per the alternating-halves contract.
-    "legacy_normalize_records",
-    "g6x_phash_components_keepers",
-    "decontaminate_against_benchmark",
-    "dedup_containment",
-    "text_repetition_metrics",
-    "text_redact_pii",
-    "text_charbigram_logprob",
-    "sample_stratified_mix",
-    "pack_training_sequences",
-    "text_paragraph_dedup",
-    "text_substring_dedup",
-    "embed_label_coherence_outliers",
-    "dedup_exact",
-    "dedup_simhash",
-    "text_langid",
-    "text_quality_score",
-    "text_fingerprint_rolling",
-    "text_token_count_bpe",
-    "dedup_minhash_lsh",
-    "text_winnowing_fingerprints",
-    "tpch_q1_pricing_summary",
-    # queries whose implementation changed in the r6 optimization round —
-    # must be re-graded (widen/emission/verify/projection/empty-doc edits)
-    "dedup_ngram_jaccard",
-    "curation_pipeline",
-    "dedup_components_keepers",
-    "j1_anti_join_seen",
-    "w2_first_occurrence_dedup",
-    "o4_frontier_pop_topk",
-    "g6_phash_banded_neardup",
-    "text_bm25_scores",
-    "text_tfidf_top_terms",
-    "sketch_hll_distinct_users",
-]
-
-
-def ordered_registry() -> dict[str, QuerySpec]:
-    """REGISTRY re-ordered for driver grading: promoted front, rotated tail."""
-    front = [n for n in _PROMOTED_TO_FRONT if n in REGISTRY]
-    tail = [n for n in _ROTATED_TO_TAIL if n in REGISTRY]
-    mid = [n for n in REGISTRY if n not in set(front) | set(tail)]
-    order = front + mid + tail
-    assert sorted(order) == sorted(REGISTRY), "ordering must cover REGISTRY exactly"
-    return {n: REGISTRY[n] for n in order}

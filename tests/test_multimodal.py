@@ -1,9 +1,7 @@
-"""Multimodal binary-column plumbing: sniff, resize (real), audio features
-and video frame sampling (real plumbing over the stubbed codec boundary)."""
+"""Multimodal binary-column plumbing: audio features and video frame
+sampling over the in-repo WAV and YUV4MPEG2 codecs."""
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 import pytest
@@ -18,40 +16,14 @@ def media_df(spark):
     rows = []
     for i in range(6):
         rows.append((f"img-{i}", bytearray(encode_png(make_image(i, size=64)))))
-    rng = np.random.default_rng(5)
     for i in range(4):
         pcm = (np.sin(np.linspace(0, 40 * (i + 1), 16000)) * 20000).astype("<i2")
-        rows.append((f"aud-{i}", bytearray(MM.encode_fake_audio(pcm, 16000))))
+        rows.append((f"aud-{i}", bytearray(MM.encode_wav(pcm, 16000))))
     for i in range(3):
         frames = np.stack([make_image(100 + i * 10 + f, size=32) for f in range(9)])
-        rows.append((f"vid-{i}", bytearray(MM.encode_fake_video(frames))))
+        rows.append((f"vid-{i}", bytearray(MM.encode_y4m(frames))))
     rows.append(("junk-0", bytearray(b"mystery bytes")))
     return spark.createDataFrame(rows, ["media_id", "bytes"])
-
-
-def test_sniff_metadata(spark, media_df):
-    got = {r["media_id"]: r["mime"] for r in MM.sniff_binary_metadata(media_df, "media_id", "bytes").collect()}
-    assert got["img-0"] == "image/png"
-    assert got["aud-1"] == "audio/fake-pcm"
-    assert got["vid-2"] == "video/fake-raw"
-    assert got["junk-0"] == "application/octet-stream"
-
-
-def test_resize_images_real(spark, media_df):
-    out = MM.resize_images(
-        media_df.where("media_id like 'img-%'"), 16, id_col="media_id"
-    ).collect()
-    assert len(out) == 6
-    for r in out:
-        rgb = decode_png(bytes(r["bytes"]))
-        assert rgb.shape == (16, 16, 3)
-    # area-resize of a flat image stays flat (content sanity)
-    flat = spark.createDataFrame(
-        [("f", bytearray(encode_png(np.full((64, 64, 3), 128, np.uint8))))],
-        ["image_id", "bytes"],
-    )
-    r = MM.resize_images(flat, 8).collect()[0]
-    assert (decode_png(bytes(r["bytes"])) == 128).all()
 
 
 def test_audio_features_plumbing(spark, media_df):
@@ -198,37 +170,6 @@ def test_mm_audio_oracle_literals_current():
     assert got == expect
 
 
-def test_image_stats_features(spark):
-    """image_stats (LAION-style pre-filter features): a flat solid image has
-    ~zero std/entropy/edges; a noisy one is high on all three; dimensions
-    and luminance land where constructed; undecodable rows drop."""
-    import numpy as np
-
-    from german_newspaper_crawler_spark.functions.codec import encode_png
-    from german_newspaper_crawler_spark.operators.multimodal import image_stats
-
-    flat = np.full((16, 24, 3), 128, dtype=np.uint8)
-    rng = np.random.default_rng(7)
-    noisy = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8).astype(np.uint8)
-    rows = [
-        ("flat", bytearray(encode_png(flat))),
-        ("noisy", bytearray(encode_png(noisy))),
-        ("broken", bytearray(b"\x00\x01notanimage")),
-        ("null", None),
-    ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
-    got = {r["image_id"]: r for r in image_stats(df).collect()}
-    assert set(got) == {"flat", "noisy"}  # broken/null dropped
-    f, n = got["flat"], got["noisy"]
-    assert (f["w"], f["h"]) == (24, 16)
-    assert abs(f["mean_lum"] - 128.0) < 1.0
-    assert f["std_lum"] == 0.0 and f["entropy"] == 0.0 and f["edge_density"] == 0.0
-    assert n["std_lum"] > 30 and n["entropy"] > 4 and n["edge_density"] > 0.5
-    # the downstream filter is a plain relational predicate
-    kept = image_stats(df).where("std_lum > 5 AND entropy > 1").collect()
-    assert [r["image_id"] for r in kept] == ["noisy"]
-
-
 def test_g5_and_video_oracle_literals_current():
     """Drift guard for the two literal oracles pinned in round 4: the
     g5_image_decode_phash and mm_video_frame_sample VALUES blocks must
@@ -331,54 +272,3 @@ def test_y4m_decode_roundtrip_and_psnr_invariants():
         MM.decode_video(b"YUV4MPEG2 W32 H32 F25:1 C444\nFRAME\n" + b"\x00" * 10)
     with pytest.raises(ValueError):
         MM.encode_y4m(np.zeros((1, 3, 3, 3), np.uint8), chroma="420")
-
-
-def test_g711_expand_known_codewords_and_monotonicity():
-    # CCITT g711.c reference values: µ-law 0x00 -> -32124, 0xFF -> 0,
-    # 0x80 -> +32124; A-law 0xD5 -> +8, 0x55 -> -8, 0xAA -> +32256
-    mu = MM._g711_expand(np.array([0x00, 0xFF, 0x80], np.uint8), "ulaw")
-    assert np.allclose(mu * 32768.0, [-32124, 0, 32124])
-    al = MM._g711_expand(np.array([0xD5, 0x55, 0xAA], np.uint8), "alaw")
-    assert np.allclose(al * 32768.0, [8, -8, 32256])
-    # each law is a bijection over the 256 codewords onto a symmetric-ish
-    # grid; sorted decode must be strictly monotone (no duplicate levels
-    # except µ-law's two zero codewords 0xFF/0x7F)
-    all_mu = np.sort(MM._g711_expand(np.arange(256, dtype=np.uint8), "ulaw"))
-    assert np.sum(np.diff(all_mu) == 0) == 1  # ±0 collapse only
-    all_al = np.sort(MM._g711_expand(np.arange(256, dtype=np.uint8), "alaw"))
-    assert np.all(np.diff(all_al) > 0)
-
-
-def test_g711_compress_expand_roundtrip():
-    rng = np.random.default_rng(42)
-    x = rng.integers(-32768, 32768, 4096).astype(np.int16)
-    for law, max_err in [("ulaw", 512 + 132), ("alaw", 1024 + 8)]:
-        cw = MM.g711_compress(x, law)
-        rt = MM._g711_expand(cw, law) * 32768.0
-        # error bounded by half the top-segment step (+ clip headroom)
-        assert np.max(np.abs(rt - np.clip(x, -32635, 32635))) <= max_err
-        # compress is the pseudo-inverse: re-compressing the decode is identity
-        assert np.array_equal(MM.g711_compress(rt.astype(np.int16), law), cw)
-    # sine SNR through the codec comfortably exceeds telephony spec ~35dB
-    t = np.arange(8000) / 8000.0
-    sine = (np.sin(2 * np.pi * 440 * t) * 20000).astype(np.int16)
-    dec = MM._g711_expand(MM.g711_compress(sine, "ulaw"), "ulaw") * 32768.0
-    err = dec - sine
-    snr = 10 * np.log10(np.sum(sine.astype(np.float64) ** 2) / np.sum(err**2))
-    assert snr > 35.0
-
-
-def test_g711_wav_container_decode():
-    rng = np.random.default_rng(7)
-    cw = rng.integers(0, 256, 1600).astype(np.uint8)
-    for law in ("ulaw", "alaw"):
-        wav = MM.encode_wav_g711(cw, 8000, law)
-        samples, sr = MM.decode_audio(wav)
-        assert sr == 8000
-        assert np.array_equal(samples, MM._g711_expand(cw, law))
-    with pytest.raises(NotImplementedError):
-        # ADPCM (format 2) still honestly unsupported
-        bad = MM.encode_wav_g711(cw, 8000, "ulaw").replace(
-            struct.pack("<HH", 7, 1), struct.pack("<HH", 2, 1), 1
-        )
-        MM.decode_audio(bad)

@@ -56,3 +56,33 @@ def test_crawl_emits_structured_log(spark, tmp_path):
     assert events[-1] == "run_complete"
     done = read_logs(spark, store).where("event = 'run_complete'").first()
     assert json.loads(done["payload"])["articles"] == stats["articles"]
+
+
+def test_crawl_metrics_rows_time_rounds_and_count_failures(spark, tmp_path):
+    """The per-round ``metrics`` rows carry the round's wall time and the
+    exact number of failed fetches: one fetcher exception plus the two
+    fixture pages that answer 500, all in the article round."""
+    from german_newspaper_crawler_spark.fixtures import make_fixtures
+    from german_newspaper_crawler_spark.plans.crawl import CrawlConfig, run_crawl
+    from german_newspaper_crawler_spark.sources.fetch import table_fetcher
+
+    seeds, pages, blobs, _ = make_fixtures(n_hosts=1, articles_per_host=3)
+    fixture_fetch = table_fetcher(pages, blobs)
+
+    def failing_fetch(url):
+        if url.endswith("/artikel/a0"):
+            raise ConnectionError(url)
+        return fixture_fetch(url)
+
+    seeds_df = spark.createDataFrame(
+        [(s["domain"], s["base_url"], s["host"], s["collection"]) for s in seeds],
+        ["domain", "base_url", "host", "collection"],
+    )
+    store = SnapshotStore(str(tmp_path / "s"))
+    cfg = CrawlConfig(n_buckets=8, max_rounds=3, parsed_ts=datetime(2026, 1, 2),
+                      extract_images=False)
+    run_crawl(spark, store, seeds_df, failing_fetch, cfg=cfg)
+    rows = store.read(spark, "metrics").orderBy("round").collect()
+    # a0 raised, a2 (the fixture's last article) and static/broken0 are 500s
+    assert [(r["round"], r["n_failed"]) for r in rows] == [(0, 0), (1, 3)]
+    assert all(r["wall_ms"] is not None and r["wall_ms"] > 0 for r in rows)

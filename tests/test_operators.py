@@ -689,6 +689,9 @@ def test_widen_if_narrow_scan_vs_shuffled_inputs(spark, tmp_path):
     assert widened.rdd.getNumPartitions() == p
     # rows unchanged, just redistributed
     assert widened.count() == 1000
+    # a column NAMED like an operator does not make the scan look shuffled
+    named = scan.withColumnRenamed("text", "Joined")
+    assert widen_if_narrow(named).rdd.getNumPartitions() == p
 
     # aggregated input: plan contains an Aggregate -> returned AS-IS (its
     # output is already as wide as the shuffle parallelism, and probing it
