@@ -54,14 +54,33 @@ def params_for(n_items: int, fpr: float = 0.01) -> tuple[int, int]:
     return m, min(k, 16)
 
 
+# hex digit byte -> nibble value; every other byte maps past 15
+_NIBBLE = np.full(256, 16, dtype=np.uint64)
+_NIBBLE[np.frombuffer(b"0123456789", np.uint8)] = np.arange(10, dtype=np.uint64)
+_NIBBLE[np.frombuffer(b"abcdef", np.uint8)] = np.arange(10, 16, dtype=np.uint64)
+_NIBBLE[np.frombuffer(b"ABCDEF", np.uint8)] = np.arange(10, 16, dtype=np.uint64)
+_POW16 = np.uint64(16) ** np.arange(14, -1, -1, dtype=np.uint64)
+
+
+def _hex_halves(hashes: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """``int(h[:15], 16)`` and ``int(h[15:30], 16)`` per digest, decoded in
+    numpy: the first 30 chars as fixed-width bytes, a nibble lookup, and a
+    dot with powers of 16 (15 nibbles are 60 bits, so uint64 never wraps).
+    Digests must have at least 30 hex chars; anything else raises."""
+    raw = np.asarray(hashes, dtype="S30")
+    nib = _NIBBLE[np.frombuffer(raw.tobytes(), np.uint8)].reshape(len(raw), 30)
+    if (nib > 15).any():  # a non-hex char, or padding of a short digest
+        raise ValueError("Bloom probe needs hex digests of at least 30 chars")
+    return nib[:, :15] @ _POW16, nib[:, 15:] @ _POW16
+
+
 def _probe_positions(hashes: pd.Series, m: int, k: int) -> np.ndarray:
     """(len, k) probe bit positions from sha256 hex digests (vectorized).
 
     h_i = (h1 + i*h2) mod m with h1/h2 from the first/second 15 hex chars —
     standard double hashing; identical across build and query sides.
     """
-    h1 = hashes.str.slice(0, 15).apply(int, base=16).to_numpy(dtype=np.uint64)
-    h2 = hashes.str.slice(15, 30).apply(int, base=16).to_numpy(dtype=np.uint64)
+    h1, h2 = _hex_halves(hashes)
     i = np.arange(k, dtype=np.uint64)[None, :]
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
 

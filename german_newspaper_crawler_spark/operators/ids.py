@@ -15,7 +15,8 @@ two-phase assignment:
 3. ``mapInPandas`` adds ``cumulative_offset[pid] + local position``.
 
 Everything stays Arrow-batched; the only driver materialization is the
-per-partition count vector.
+per-partition count vector. The persisted phase-1 frame is handed back to
+the caller, who releases it once the ids are materialized.
 """
 
 from __future__ import annotations
@@ -33,8 +34,12 @@ def assign_ids(
     offset: int = 0,
     id_col: str = "_id",
     num_partitions: int | None = None,
-) -> DataFrame:
-    """Assign dense ids ``offset+1, offset+2, ...`` in ``order_cols`` order."""
+) -> tuple[DataFrame, DataFrame]:
+    """Assign dense ids ``offset+1, offset+2, ...`` in ``order_cols`` order.
+
+    Returns ``(with_ids, cached)``: ``cached`` is the persisted, range-sorted
+    input that ``with_ids`` reads; unpersist it once ``with_ids`` has been
+    materialized (a frame returned lazily keeps it for the session)."""
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ordered = (
         df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
@@ -72,8 +77,7 @@ def assign_ids(
             out.insert(0, id_col, pd.Series(list(ids), index=out.index, dtype="int64"))
             yield out
 
-    result = ordered.mapInPandas(add_ids, schema=out_schema)
-    return result
+    return ordered.mapInPandas(add_ids, schema=out_schema), ordered
 
 
 def grouped_cumsum(

@@ -218,5 +218,5 @@ def normalize_legacy_records(
         return keep
     from german_newspaper_crawler_spark.operators.ids import assign_ids
 
-    assigned = assign_ids(fresh, order_cols=order_cols, offset=int(high))
+    assigned, _ = assign_ids(fresh, order_cols=order_cols, offset=int(high))
     return keep.unionByName(assigned.select(*[f.name for f in LEGACY_NORMALIZED.fields]))

@@ -688,7 +688,13 @@ def run_crawl(
             frontier, cfg.per_host_budget,
             authority=authority, round_budget=cfg.round_budget,
         ).cache()
-        if batch.isEmpty():
+        # every frame the round caches is released at round end
+        round_cache = [batch]
+        # one census of the popped kinds: an empty set ends the crawl, and a
+        # leg runs only if its kind was popped (attach_robots is a left join,
+        # so the robots-joined batch holds the same kinds)
+        kinds = {r["kind"] for r in batch.select("kind").distinct().collect()}
+        if not kinds:
             batch.unpersist()
             break
         seen = store.read(spark, "seen", schemas.SEEN)
@@ -717,12 +723,12 @@ def run_crawl(
         round_ts = cfg.parsed_ts or datetime.utcnow()  # F10 injected clock
 
         # 1) listings → fused fetch+anchor-extract → frontier refill
-        listings = work.where(F.col("kind") == "listing")
-        if not listings.isEmpty():
+        if "listing" in kinds:
             anchors = fetch_parse_listings_stage(
-                listings, fetcher, robots=round_robots, respect_delay=cfg.respect_delay,
-                concurrency=cfg.fetch_concurrency,
+                work.where(F.col("kind") == "listing"), fetcher, robots=round_robots,
+                respect_delay=cfg.respect_delay, concurrency=cfg.fetch_concurrency,
             ).cache()
+            round_cache.append(anchors)
             status_parts.append(
                 anchors.where(F.col("sel_rank") == -1).select("page_url", "status")
                 .withColumnRenamed("page_url", "url")
@@ -739,11 +745,10 @@ def run_crawl(
         #    urls never reach the fetch stage (status -304, state
         #    "skipped"), and the post-fetch check is one linear anti-join —
         #    the fetched batch has a single consumer chain.
-        art_batch = work.where(F.col("kind") == "article")
-        if not art_batch.isEmpty():
+        if "article" in kinds:
             scope = "domain" if cfg.strict_refresh_replace else None
             art_fresh, art_skipped = prefilter_known_urls(
-                art_batch, seen, scope_col=scope
+                work.where(F.col("kind") == "article"), seen, scope_col=scope
             )
             parsed = article_identity(
                 fetch_parse_articles_stage(
@@ -751,6 +756,7 @@ def run_crawl(
                     concurrency=cfg.fetch_concurrency,
                 )
             ).cache()
+            round_cache.append(parsed)
             status_parts.append(parsed.select("url", "status"))
             status_parts.append(
                 art_skipped.select("url", F.lit(-304).alias("status"))
@@ -806,7 +812,7 @@ def run_crawl(
                     F.lit(None).cast("timestamp")
                 ),
             ).withColumn("ai_keywords", F.array().cast(ArrayType(StringType())))
-            final = assign_ids(
+            final, id_order = assign_ids(
                 final, order_cols=["domain", "priority", "seq"],
                 offset=id_highwater,
             )
@@ -815,7 +821,9 @@ def run_crawl(
                 "published_date", "parsed_date", "html_gz", "text",
                 "ai_keywords", "pos_taggs", "content_hash", "domain",
             ).cache()
+            round_cache.append(articles_out)
             n_articles = articles_out.count()
+            id_order.unpersist()  # the ids now live in articles_out's cache
             id_highwater += n_articles
             if n_articles:
                 # keyed delta, not a full-table MERGE rewrite — same
@@ -866,12 +874,12 @@ def run_crawl(
                 )
 
         # 4) images → fused fetch+decode+phash → exact-phash dedup → append
-        img_batch = work.where(F.col("kind") == "image")
-        if not img_batch.isEmpty():
+        if "image" in kinds:
             img_out = fetch_images_stage(
-                img_batch, fetcher, robots=round_robots, respect_delay=cfg.respect_delay,
-                concurrency=cfg.fetch_concurrency,
+                work.where(F.col("kind") == "image"), fetcher, robots=round_robots,
+                respect_delay=cfg.respect_delay, concurrency=cfg.fetch_concurrency,
             ).cache()
+            round_cache.append(img_out)
             status_parts.append(img_out.select("url", "status"))
             imgs = img_out.where(F.col("bytes").isNotNull()).select(
                 *[f.name for f in schemas.IMAGES.fields], "priority", "seq"
@@ -905,6 +913,10 @@ def run_crawl(
                     .withColumn("doc_pos", F.col("seq")),
                     url_col="phash",
                 ).select(*[f.name for f in schemas.IMAGES.fields])
+            # three consumers (count, images append, seen_phash append):
+            # run the near-dup joins once
+            imgs = imgs.cache()
+            round_cache.append(imgs)
             n_images = imgs.count()
             if n_images:
                 store.append("images", imgs)
@@ -986,7 +998,8 @@ def run_crawl(
         total_fetched += n_fetched
         total_articles += n_articles
         total_images += n_images
-        batch.unpersist()
+        for cached in round_cache:
+            cached.unpersist()
 
     # G7: persist per-round lineage/metrics (per-partition fetch_ms detail
     # lives in the FETCHED.fetch_ms column; this is the run-level rollup)

@@ -540,9 +540,8 @@ def w1_a3_id_assignment(spark, sf_dir):
     from german_newspaper_crawler_spark.operators.ids import assign_ids
 
     df = t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    return assign_ids(df, order_cols=["ts", "event_id"], offset=1000).select(
-        "_id", "event_id", "user_id"
-    )
+    with_ids, _ = assign_ids(df, order_cols=["ts", "event_id"], offset=1000)
+    return with_ids.select("_id", "event_id", "user_id")
 
 
 # ---------------------------------------------------------------------------

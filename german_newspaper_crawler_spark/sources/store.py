@@ -13,6 +13,15 @@ manifest-swap commit:
   older manifest entry; resume = the latest committed manifest, exactly the
   Iceberg snapshot-checkpoint semantics the north rule requires).
 
+The manifest also carries the table schema (the Iceberg table-metadata
+analog): a list of schemas plus the current schema id, and every snapshot
+entry names the schema it reads with. Appends and keyed deltas add the
+frame's new columns to the current schema (an added column reads as null on
+older files); an overwrite replaces it. Reads pass the recorded schema to
+the parquet reader, so they never infer it from file footers and launch no
+Spark job. Only a manifest written before schemas were recorded falls back
+to footer inference.
+
 Appends add a snapshot dir to the live set; overwrites replace the live set;
 ``merge`` rewrites the live set with MERGE semantics via
 :func:`operators.merge.merge_upsert`.
@@ -73,10 +82,18 @@ class SnapshotStore:
             if schema is None:
                 raise FileNotFoundError(f"table {table} is empty and no schema given")
             return spark.createDataFrame([], schema)
-        return self._resolve(spark, table, m, m["live"])
+        return self._resolve(spark, table, m, m["live"], m.get("schema_id"))
 
-    def _resolve(self, spark: SparkSession, table: str, m: dict, live: list[str]) -> DataFrame:
+    def _resolve(self, spark: SparkSession, table: str, m: dict, live: list[str],
+                 schema_id: int | None) -> DataFrame:
         """Resolve a live snapshot set to a DataFrame, applying merge-on-read.
+
+        Every path is read with the manifest schema ``schema_id`` — the
+        schema is recorded at commit time and never inferred here, so
+        building the frame launches no Spark job, and a column added by a
+        later commit reads as null on older files. ``schema_id`` is None
+        only for a snapshot committed before schemas were recorded; its
+        paths fall back to footer inference.
 
         Plain tables (no ``merge-delta`` commits) read as a straight multi-dir
         parquet scan. Tables with delta commits resolve Iceberg
@@ -90,24 +107,22 @@ class SnapshotStore:
         op_of = {s["dir"]: s["op"] for s in m["snapshots"]}
         delta_dirs = [d for d in live if op_of.get(d) == "merge-delta"]
         base_dirs = [d for d in live if op_of.get(d) != "merge-delta"]
+        schema = None if schema_id is None else StructType.fromJson(m["schemas"][schema_id])
+
+        def reader():  # a fresh reader per scan: options set on one stick
+            return spark.read if schema is None else spark.read.schema(schema)
 
         def read_dirs(dirs: list[str]) -> DataFrame:
             paths = [os.path.join(tdir, d) for d in dirs]
             if not m.get("partition_spec"):
-                if len(paths) == 1:
-                    return spark.read.parquet(*paths)
-                # schema evolution across snapshots (Iceberg add-column
-                # analog): merge footers so an added column reads as null
-                # on old files instead of being dropped by the sampled
-                # schema; compaction folds back to the single-dir fast path
-                return spark.read.option("mergeSchema", "true").parquet(*paths)
+                return reader().parquet(*paths)
             # hive-partitioned snapshots: each snapshot dir is its own
             # partition root — read separately and union (Spark refuses
             # multi-root partition discovery); per-scan partition pruning
             # is preserved, compaction keeps the union short
             out = None
             for p in paths:
-                part = spark.read.option("basePath", p).parquet(p)
+                part = reader().option("basePath", p).parquet(p)
                 out = part if out is None else out.unionByName(
                     part, allowMissingColumns=True
                 )
@@ -120,7 +135,7 @@ class SnapshotStore:
 
         deltas = None
         for ord_, d in enumerate(delta_dirs):
-            part = spark.read.parquet(os.path.join(tdir, d)).withColumn(
+            part = reader().parquet(os.path.join(tdir, d)).withColumn(
                 "_snap_ord", F.lit(ord_)
             )
             deltas = part if deltas is None else deltas.unionByName(
@@ -166,23 +181,43 @@ class SnapshotStore:
         w.parquet(os.path.join(self._tdir(table), snap))
         return snap
 
-    def append(self, table: str, df: DataFrame, op: str = "append") -> int:
+    def _commit_snapshot(self, table: str, df: DataFrame, op: str, replace: bool,
+                         keys: list[str] | None = None) -> int:
+        """Write ``df`` as a new snapshot and commit it, added to the live
+        set or (``replace``) as the whole live set. A replace makes the
+        frame's schema the table schema; otherwise the frame's new columns
+        are added to the current one (a manifest that recorded none yet
+        takes the frame's). Returns the new snapshot id."""
         snap = self._write_snapshot(table, df)
         m = self._read_manifest(table)
+        if keys is not None:
+            prev = m.get("merge_keys")
+            if prev and prev != keys:
+                raise ValueError(f"{table} merge keys {prev} != {keys}")
+            m["merge_keys"] = keys
+        schema = df.schema
+        if not replace and m["live"] and m.get("schema_id") is not None:
+            have = StructType.fromJson(m["schemas"][m["schema_id"]])
+            names = set(have.fieldNames())
+            schema = StructType(have.fields + [f for f in schema.fields if f.name not in names])
+        schemas, js = m.setdefault("schemas", []), schema.jsonValue()
+        if js not in schemas:
+            schemas.append(js)
+        m["schema_id"] = schemas.index(js)
         m["seq"] += 1
-        m["live"].append(snap)
-        m["snapshots"].append({"id": m["seq"], "dir": snap, "op": op, "ts": time.time(), "live": list(m["live"])})
+        m["live"] = [snap] if replace else m["live"] + [snap]
+        m["snapshots"].append(
+            {"id": m["seq"], "dir": snap, "op": op, "ts": time.time(),
+             "live": list(m["live"]), "schema_id": m["schema_id"]}
+        )
         self._commit(table, m)
         return m["seq"]
 
+    def append(self, table: str, df: DataFrame, op: str = "append") -> int:
+        return self._commit_snapshot(table, df, op, replace=False)
+
     def overwrite(self, table: str, df: DataFrame, op: str = "overwrite") -> int:
-        snap = self._write_snapshot(table, df)
-        m = self._read_manifest(table)
-        m["seq"] += 1
-        m["live"] = [snap]
-        m["snapshots"].append({"id": m["seq"], "dir": snap, "op": op, "ts": time.time(), "live": [snap]})
-        self._commit(table, m)
-        return m["seq"]
+        return self._commit_snapshot(table, df, op, replace=True)
 
     def merge(self, spark: SparkSession, table: str, batch: DataFrame, keys: list[str],
               schema: StructType | None = None) -> int:
@@ -224,20 +259,7 @@ class SnapshotStore:
 
         for kcol in keys:
             batch = batch.where(F.col(kcol).isNotNull())
-        snap = self._write_snapshot(table, batch)
-        m = self._read_manifest(table)
-        m["seq"] += 1
-        m["live"].append(snap)
-        prev = m.get("merge_keys")
-        if prev and prev != keys:
-            raise ValueError(f"{table} merge keys {prev} != {keys}")
-        m["merge_keys"] = keys
-        m["snapshots"].append(
-            {"id": m["seq"], "dir": snap, "op": "merge-delta", "ts": time.time(),
-             "live": list(m["live"])}
-        )
-        self._commit(table, m)
-        return m["seq"]
+        return self._commit_snapshot(table, batch, "merge-delta", replace=False, keys=keys)
 
     def compact(self, spark: SparkSession, table: str) -> int:
         """Compact the live set into one snapshot (Iceberg rewrite_data_files
@@ -263,7 +285,8 @@ class SnapshotStore:
         m["live"] = m["live"][-keep_last:]
         m["snapshots"].append(
             {"id": m["seq"], "dir": m["live"][-1] if m["live"] else "",
-             "op": "prune", "ts": time.time(), "live": list(m["live"])}
+             "op": "prune", "ts": time.time(), "live": list(m["live"]),
+             "schema_id": m.get("schema_id")}
         )
         self._commit(table, m)
         return dropped
@@ -300,5 +323,5 @@ class SnapshotStore:
         m = self._read_manifest(table)
         for s in m["snapshots"]:
             if s["id"] == snapshot_id:
-                return self._resolve(spark, table, m, s["live"])
+                return self._resolve(spark, table, m, s["live"], s.get("schema_id"))
         raise KeyError(f"snapshot {snapshot_id} not found for {table}")

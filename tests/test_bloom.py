@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import hashlib
 
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from german_newspaper_crawler_spark.functions.hashing import hash64
@@ -134,3 +137,22 @@ def test_persistent_incremental_blooms_equal_full_rebuild(spark, tmp_path):
     ops = [s["op"] for s in store._read_manifest("blooms")["snapshots"]]
     assert ops.count("bloom-rebuild") >= 2  # initial + overflow rebuild
     assert store.read(spark, "blooms").select("m").first()["m"] > m0
+
+
+@given(st.lists(st.binary(max_size=40), max_size=64), st.booleans())
+@settings(max_examples=200, deadline=None)
+def test_hex_halves_match_int_parse(payloads, upper):
+    """The numpy nibble decode of the probe halves equals Python's
+    ``int(h[:15], 16)`` / ``int(h[15:30], 16)`` on random sha256 digests."""
+    hexes = [hashlib.sha256(p).hexdigest() for p in payloads]
+    if upper:
+        hexes = [h.upper() for h in hexes]
+    h1, h2 = bloom._hex_halves(pd.Series(hexes, dtype=object))
+    assert h1.tolist() == [int(h[:15], 16) for h in hexes]
+    assert h2.tolist() == [int(h[15:30], 16) for h in hexes]
+
+
+@pytest.mark.parametrize("bad", ["0" * 29, "g" * 30, None])
+def test_hex_halves_reject_non_digests(bad):
+    with pytest.raises(ValueError):
+        bloom._hex_halves(pd.Series(["0" * 30, bad], dtype=object))

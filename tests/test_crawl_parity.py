@@ -337,6 +337,29 @@ def test_frontier_writes_are_batch_sized_deltas(spark, tmp_path):
     assert sum(all_rows) <= 2 * total
 
 
+def test_crawl_releases_round_caches(spark, tmp_path):
+    """Every frame a round caches (the pop batch, the fetch outputs, the id
+    assigner's sorted input, the accepted images) is released by the end of
+    its round: a multi-round crawl with images, robots and Bloom leaves
+    Spark's persisted-RDD set as it found it."""
+    seeds, pages, blobs, _ = make_fixtures(n_hosts=2, articles_per_host=3, figs_per_article=1)
+    for s in seeds:
+        pages[f"https://{s['host']}/robots.txt"] = (200, "User-agent: *\nDisallow: /intern/")
+    seeds_df = spark.createDataFrame(
+        [(s["domain"], s["base_url"], s["host"], s["collection"]) for s in seeds],
+        ["domain", "base_url", "host", "collection"],
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    stats = run_crawl(
+        spark, SnapshotStore(str(tmp_path / "rc")), seeds_df, table_fetcher(pages, blobs),
+        cfg=CrawlConfig(n_buckets=8, max_rounds=4, parsed_ts=PARSED_TS,
+                        use_robots_table=True, use_bloom=True),
+    )
+    assert stats["rounds"] >= 3 and stats["articles"] > 0 and stats["images"] > 0
+    assert persisted().size() == before
+
+
 def test_full_feature_matrix_crawl_matches_plain(spark, tmp_path):
     """Cross-feature integration: robots table (merge-delta) + persistent
     incremental Bloom + mapInPandas tagger stage + per-round frontier

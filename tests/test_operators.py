@@ -20,14 +20,11 @@ def test_assign_ids_matches_row_number_any_partitioning(spark):
         ).collect()
     ]
     for parts in (1, 3, 16):
-        got = [
-            (r["event_id"], r["_id"])
-            for r in assign_ids(
-                df.repartition(7), ["ts", "event_id"], offset=1000, num_partitions=parts
-            )
-            .select("event_id", "_id")
-            .collect()
-        ]
+        with_ids, cached = assign_ids(
+            df.repartition(7), ["ts", "event_id"], offset=1000, num_partitions=parts
+        )
+        got = [(r["event_id"], r["_id"]) for r in with_ids.select("event_id", "_id").collect()]
+        cached.unpersist()
         assert sorted(got) == sorted(expect), parts
 
 
@@ -52,6 +49,22 @@ def test_store_snapshots_and_time_travel(spark, tmp_path):
     # resume-from-checkpoint: a fresh store object sees the committed state
     store2 = SnapshotStore(str(tmp_path))
     assert {(r["k"], r["v"]) for r in store2.read(spark, "t").collect()} == got
+
+    # add-column evolution: the manifest schema gains w, and the rows written
+    # before it read w as null
+    s4 = store.append("t", spark.createDataFrame([(4, "w", 7)], "k long, v string, w int"))
+    got_w = {r["k"]: r["w"] for r in store.read(spark, "t").collect()}
+    assert got_w == {1: None, 2: None, 3: None, 4: 7}
+
+    # an overwrite replaces the schema; time travel to a snapshot before it
+    # reads with that snapshot's schema
+    store.overwrite("t", spark.createDataFrame([(5, 1.5)], "k long, x double"))
+    assert store.read(spark, "t").columns == ["k", "x"]
+    old = store.read_at(spark, "t", s4)
+    assert old.columns == ["k", "v", "w"]
+    assert {(r["k"], r["v"], r["w"]) for r in old.collect()} == {
+        (1, "x", None), (2, "Y", None), (3, "z", None), (4, "w", 7)
+    }
 
 
 def test_store_compact_and_expire(spark, tmp_path):
@@ -109,6 +122,18 @@ def test_store_merge_delta_write_volume_and_resolution(spark, tmp_path):
 
     # time travel re-applies the resolution as of the old snapshot
     assert store.read_at(spark, "t", sid).where("v = 'fetched'").count() == 10
+
+    # the manifest carries the schema: resolving base + deltas launches no
+    # Spark job (no footer inference, no schema merge)
+    sc = spark.sparkContext
+    sc.setJobGroup("store-read-jobs", "store.read of base + deltas")
+    try:
+        resolved = store.read(spark, "t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("store-read-jobs")) == []
+    assert resolved.count() == 1001
 
     # compaction folds deltas into one base dir; result set unchanged
     store.compact(spark, "t")
